@@ -286,8 +286,8 @@ def main() -> None:
     # (driver r7: headline 10.07 s vs 9.5 s solo). One end-to-end execution
     # per headline query compiles the hot plans before any timing starts —
     # the same session state a production driver reaches after its first
-    # request. Measured (tools/exp_warmlap.py, alternating 1-lap/2-lap
-    # headline-only sessions): a SECOND lap does not move slot-1
+    # request. Measured (alternating 1-lap/2-lap headline-only sessions;
+    # script removed, see git history): a SECOND lap does not move slot-1
     # (10.09/9.91 s one-lap vs 10.56/9.89 s two-lap — inside run noise);
     # the residual ~0.3-0.5 s slot1-vs-warm gap is scheduler/GC noise,
     # which the *_warm fold already reports honestly. Disclosed in the

@@ -5,6 +5,7 @@ of the reference ML pipeline (Adeemy/end-to-end-ml), rebuilt Spark-first.
 Layout
 ------
 - ``session``    SparkSession factory (AQE on, UTC, tuned shuffle partitions)
+- ``materialize`` the one policy for checkpointing/persisting reused frames
 - ``sources``    parquet/CSV/JSON readers+writers, schema registry
 - ``operators``  relational operators: prep (clean/cast/dedup), split
                  (stratified/time), pit (as-of join), dedup (exact/MinHash/

@@ -20,31 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _persist(df: DataFrame) -> DataFrame:
-    """``persist()`` guarded on the CacheManager: with memoized scans
-    (sources.io._SCAN_CACHE) a repeated operator call rebuilds an IDENTICAL
-    logical plan, and a bare ``persist()`` on it triggers ``WARN
-    CacheManager: Asked to cache already cached data`` — worse, in a
-    long-lived session a later ``unpersist()`` from one call site would
-    evict the sibling's live cache. ``df.storageLevel`` consults the
-    session CacheManager by plan, so this is a true already-cached test,
-    not an object-identity test."""
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
-        return df
-    return df.persist()
-
-
-def _persist_owned(df: DataFrame) -> tuple[DataFrame, bool]:
-    """Like :func:`_persist` but reports whether THIS call performed the
-    persist. A call site that wants to ``unpersist()`` on exit must only do
-    so when it owns the cache — if the guard returned an already-cached
-    sibling (identical plan cached by another call site), unpersisting here
-    would evict the sibling's live cache mid-use, the exact hazard the
-    guard exists to prevent."""
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
-        return df, False
-    return df.persist(), True
+from ..materialize import persist_owned, reuse
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -422,7 +398,7 @@ def minhash_dedup_pairs(
     sig = minhash_signatures_agg(
         _spread(df), id_col, char_shingles(text_col, shingle_size), num_hashes, seed
     )
-    sig = _persist(sig)
+    sig, _ = persist_owned(sig)
     cands = _band_candidates(sig, num_hashes, bands)
     est = _estimator_prune(
         cands, sig, sig, "id_a", "id_b", num_hashes, threshold, estimator_margin
@@ -453,7 +429,7 @@ class MinHashIndex:
     minhash_signatures_agg + the shared _banded projection emit, so
     probe plans are identical from the join onward). ``unpersist()``
     releases both; only frames THIS index persisted are dropped
-    (the _persist_owned discipline — an identical plan cached by another
+    (the persist_owned discipline — an identical plan cached by another
     call site is left alone)."""
 
     def __init__(
@@ -499,13 +475,13 @@ def minhash_build_index(
     history-derived state a probe touches — history text is read again
     only for the final exact-Jaccard verify of estimator survivors."""
     assert num_hashes % bands == 0
-    sig, sig_owned = _persist_owned(
+    sig, sig_owned = persist_owned(
         minhash_signatures_agg(
             _spread(hist_df), id_col, char_shingles(text_col, shingle_size),
             num_hashes, seed,
         )
     )
-    bands_df, bands_owned = _persist_owned(_banded(sig, num_hashes, bands))
+    bands_df, bands_owned = persist_owned(_banded(sig, num_hashes, bands))
     return MinHashIndex(
         sig, bands_df, (sig_owned, bands_owned),
         num_hashes, bands, seed, shingle_size,
@@ -572,7 +548,7 @@ def minhash_probe_pairs(
     # result — an unpersist before the caller executes would silently drop
     # the cache. O(|batch|) only; the history side comes from ``index``
     # when given (pre-persisted once per epoch, never re-cached per call).
-    sig_new = _persist(
+    sig_new, _ = persist_owned(
         minhash_signatures_agg(
             _spread(new_df), id_col, char_shingles(text_col, shingle_size),
             num_hashes, seed,
@@ -582,7 +558,7 @@ def minhash_probe_pairs(
         sig_hist = index.sig
         hist_bands = index.bands_df
     else:
-        sig_hist = _persist(
+        sig_hist, _ = persist_owned(
             minhash_signatures_agg(
                 _spread(hist_df), id_col, char_shingles(text_col, shingle_size),
                 num_hashes, seed,
@@ -734,7 +710,7 @@ def simhash_near_pairs(
     hit ReusedExchange). The cached frame is one (id, fingerprint) long
     per document — tiny at any scale (same pattern as the MinHash path's
     ``sig.persist()``)."""
-    fps = _persist(simhash(df, id_col, text_col, hash_family=hash_family))
+    fps, _ = persist_owned(simhash(df, id_col, text_col, hash_family=hash_family))
     chunked = fps.select(
         "id",
         "simhash",
@@ -942,7 +918,7 @@ def connected_components(
     silently returning partial labels would split real dup-groups and is a
     wrong answer, not a degraded one."""
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    sym, sym_owned = _persist_owned(edges.unionByName(
+    sym, sym_owned = persist_owned(edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ))  # every round joins sym: without the persist each iteration
     # re-executes the ENTIRE upstream pair-generation pipeline (signatures,
@@ -952,11 +928,11 @@ def connected_components(
     # every node appears as `b`, and least(a, b) folds the self-label in —
     # labels0 = min(self, neighbors) from ONE groupBy instead of a distinct
     # + a full propagation round (two shuffles saved off the critical path).
-    labels = (
+    labels = reuse(
         sym.select(F.col("b").alias("id"), F.least("a", "b").alias("label"))
         .groupBy("id")
-        .agg(F.min("label").alias("label"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("label").alias("label")),
+        eager=True,
     )
     converged = False
     for it in range(max_iter):
@@ -1003,7 +979,7 @@ def connected_components(
         # the convergence probe's limit(1).count() only computes a few
         # partitions, so downstream consumers silently recomputed the rest
         # through the full MinHash chain (d7: 140 s → ~15 s at sf0.1).
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = reuse(new_labels, eager=True)
         changed = (
             new_labels.filter(F.col("label") != F.col("__prev")).limit(1).count()
         )
@@ -1082,7 +1058,7 @@ def _span_intervals(df: DataFrame, id_col: str, text_col: str, n: int):
     # inside a single run). At scale the gram frame is O(total tokens) ×
     # ~28 B/row — the same order as the shuffle both consumers already
     # pay, and it spills to local disk like any shuffle write.
-    grams = grams.localCheckpoint(eager=False)
+    grams = reuse(grams)
     dup = (
         grams.groupBy("g")
         .agg(F.count(F.lit(1)).alias("__occ"))
@@ -1208,52 +1184,40 @@ def remove_duplicated_spans(
     )
 
 
-# Join-strategy knobs for prefix_filter_jaccard_pairs, A/B'd in
-# tools/exp_d16_shj_ab.py (r13 optimization round; two independent
-# alternating warmed A/Bs at sf0.1: baseline SMJ 6.76/5.67 s vs verify-SHJ
-# 5.62/4.77 s — the win is skipping BOTH sorts of the ~1M-row candidate
-# frame, the second of which carries two token arrays per row).
-#
-# Verify joins default to shuffled-hash (guide §3): the build side is the
-# hinted RANKED frame, keyed by the unique doc id — a perfectly uniform
-# hash key, so per-partition build bytes are |ranked|/numPartitions and
-# AQE's advisory sizing keeps that bounded as the corpus grows. Sort-merge
-# buys nothing here: the stream side is consumed by a hash aggregate, not
-# another merge. The CANDIDATE self-join stays planner-default (SMJ): its
-# build side would be an exploded prefix frame keyed by token df — a
-# skewable key at scale — and the third A/B arm measured no gain over
-# verify-only SHJ (5.30 vs 5.62 / 4.91 vs 4.77, within host scatter).
-_PF_VERIFY_HINT: str | None = "shuffle_hash"
-_PF_CAND_HINT: str | None = None
-# Repartition the raw candidate pairs by id_a BEFORE the dedup aggregate so
-# the dedup's exchange doubles as the first verify join's distribution.
-# A/B'd in tools/exp_d16_repart_ab.py and REJECTED (r13 optimization round:
-# 6.86 s default vs 7.48 s repartitioned, min-of-5 alternating warmed):
-# repartition("id_a") satisfies the dedup's required distribution, so the
-# planner drops the pre-shuffle partial aggregate — the exchange then
-# carries RAW candidates (~1.26x rows) and the whole dedup runs
-# post-shuffle, which costs more than the one ENSURE_REQUIREMENTS exchange
-# it saves. Kept as a knob so the measurement is reproducible.
-_PF_REPART_CAND: bool = False
-# Materialize the gram explode (toks) so dfreq + ranked share one
-# tokenize pass instead of re-running split+shingle+explode twice.
-# r13 A/B'd this pre-heap-fix and saw only scatter; re-run r14 on the
-# stable host (tools/exp_d16_r14_ab.py): toks_ckpt 4.44 vs base 4.74
-# within one alternating session, and the combined arm wins — ON. At
-# scale the saved work is a full corpus tokenize+shingle pass.
-_PF_TOKS_CKPT: bool = True
-# Cast token ids to INT when the counted vocab fits 2^31 rows (r14,
-# guide §2.3): the stoks arrays are the payload of the ranked
-# localCheckpoint and all three verify exchanges, so element width is
-# shuffle bytes. False pins the r13 BIGINT shape for A/B reproduction.
-_PF_TID_NARROW: bool = True
-# Assign vocab ordinals DRIVER-SIDE when the counted vocab is at most
-# this many rows (the r13 bpe_train precedent: a vocab table is not
-# data — guide §5). Python's (df, token) tuple sort equals Spark's
-# (df_t asc, token asc) order (UTF-8 byte order preserves codepoint
-# order), so the mapping is identical to global_ordinal's; above the
-# bound the distributed bucketed-rank path is unchanged. 0 disables.
-_PF_DRIVER_VOCAB_ROWS: int = 65536
+# Plan shape of prefix_filter_jaccard_pairs, each choice measured at sf0.1
+# in alternating warmed A/Bs (the A/B scripts are removed; see git history):
+# - Verify joins are shuffled-hash (guide §3): the build side is the
+#   RANKED frame, keyed by the unique doc id — a perfectly uniform hash
+#   key, so per-partition build bytes are |ranked|/numPartitions and AQE's
+#   advisory sizing keeps that bounded as the corpus grows. Sort-merge buys
+#   nothing: the stream side is consumed by a hash aggregate, not another
+#   merge. SMJ 6.76/5.67 s vs SHJ 5.62/4.77 s in two independent A/Bs — the
+#   win is skipping BOTH sorts of the ~1M-row candidate frame, the second
+#   of which carries two token arrays per row.
+# - The candidate self-join stays planner-default (SMJ): its build side
+#   would be an exploded prefix frame keyed by token df — a skewable key at
+#   scale — and hinting it too measured no gain over verify-only SHJ (5.30
+#   vs 5.62 / 4.91 vs 4.77 s, within host scatter).
+# - The raw candidate pairs are NOT repartitioned by id_a before the dedup
+#   aggregate (6.86 s vs 7.48 s repartitioned, min-of-5): repartition("id_a")
+#   satisfies the dedup's required distribution, so the planner drops the
+#   pre-shuffle partial aggregate — the exchange then carries RAW candidates
+#   (~1.26x rows) and the whole dedup runs post-shuffle, which costs more
+#   than the one ENSURE_REQUIREMENTS exchange it saves.
+# - The gram explode (toks) is materialized so dfreq + ranked share one
+#   tokenize pass (4.44 vs 4.74 s in one alternating session); at scale the
+#   saved work is a full corpus tokenize+shingle pass.
+# - Token ids are INT when the counted vocab fits 2^31 rows (guide §2.3):
+#   the stoks arrays are the payload of the ranked checkpoint and all three
+#   verify exchanges, so element width is shuffle bytes.
+# - Vocab ordinals are assigned DRIVER-SIDE when the counted vocab is at
+#   most _DRIVER_VOCAB_ROWS rows (the r13 bpe_train precedent: a vocab
+#   table is not data — guide §5). Python's (df, token) tuple sort equals
+#   Spark's (df_t asc, token asc) order (UTF-8 byte order preserves
+#   codepoint order), so the mapping is identical to global_ordinal's;
+#   above the bound the distributed bucketed-rank path is unchanged. With
+#   the two items above: 4.29 -> 4.06-4.13 s in one session.
+_DRIVER_VOCAB_ROWS = 65536
 
 
 def prefix_filter_jaccard_pairs(
@@ -1339,17 +1303,11 @@ def prefix_filter_jaccard_pairs(
     )
     from .ordinal import count_and_boundaries, global_ordinal
 
-    if _PF_TOKS_CKPT:
-        # one tokenize+explode pass instead of two (dfreq + ranked both
-        # consume toks) at the cost of materializing |corpus-token| rows
-        # of (doc, token-string) — the r13 A/B was scatter-dominated
-        # pre-heap-fix; re-measured r14, see _PF_TOKS_CKPT comment
-        toks = toks.localCheckpoint(eager=False)
-    dfreq = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df_t"))
-        .localCheckpoint(eager=False)
-    )
+    # one tokenize+explode pass instead of two (dfreq + ranked both
+    # consume toks) at the cost of materializing |corpus-token| rows of
+    # (doc, token-string) — see the plan-shape comment above
+    toks = reuse(toks)
+    dfreq = reuse(toks.groupBy("token").agg(F.count(F.lit(1)).alias("df_t")))
     # count + boundary sketch fused into ONE aggregate job (the r13
     # emb4/ord1 treatment): the vocab row count decides the tid WIDTH —
     # a dense ordinal over n_vocab rows fits an int iff n_vocab < 2^31,
@@ -1362,34 +1320,28 @@ def prefix_filter_jaccard_pairs(
     # bound+1 rows — when the whole vocab came back, the driver path
     # already HAS it (no count job, no sketch job); otherwise fall back
     # to the distributed bucketed rank with the fused count+sketch.
-    vrows = (
-        dfreq.limit(_PF_DRIVER_VOCAB_ROWS + 1).collect()
-        if _PF_DRIVER_VOCAB_ROWS > 0
-        else None
-    )
-    if vrows is not None and len(vrows) <= _PF_DRIVER_VOCAB_ROWS:
+    vrows = dfreq.limit(_DRIVER_VOCAB_ROWS + 1).collect()
+    if len(vrows) <= _DRIVER_VOCAB_ROWS:
         # vocab fits the driver bound: sort + enumerate locally and ship
         # the mapping as a LocalRelation — same (df_t asc, token asc)
         # ordinal as global_ordinal, without its bucket-count aggregate
         # and rank window in the broadcast build subtree
-        tid_type = "int" if _PF_TID_NARROW else "long"
         vrows.sort(key=lambda r: (r["df_t"], r["token"]))
         vocab_ids = df.sparkSession.createDataFrame(
             [(r["token"], i) for i, r in enumerate(vrows)],
-            schema=f"token string, tid {tid_type}",
+            schema="token string, tid int",
         )
     else:
         n_vocab, vocab_bnds = count_and_boundaries(dfreq, "df_t")
-        tid_type = "int" if (_PF_TID_NARROW and n_vocab <= 2**31 - 1) else "long"
+        tid_type = "int" if n_vocab <= 2**31 - 1 else "long"
         vocab_ids = global_ordinal(
             dfreq, "df_t", "token", out_col="tid", boundaries=vocab_bnds
         ).select("token", F.col("tid").cast(tid_type).alias("tid"))
-    ranked = (
+    ranked = reuse(
         toks.join(F.broadcast(vocab_ids), "token")
         .groupBy("doc")
         .agg(F.array_sort(F.collect_list("tid")).alias("stoks"))
         .select("doc", "stoks", F.size("stoks").cast("long").alias("sz"))
-        .localCheckpoint(eager=False)
     )
     p_len = (
         F.col("sz")
@@ -1412,15 +1364,9 @@ def prefix_filter_jaccard_pairs(
     )
     a = prefixes.select(F.col("doc").alias("id_a"), F.col("sz").alias("pa"), "ptok")
     b = prefixes.select(F.col("doc").alias("id_b"), F.col("sz").alias("pb"), "ptok")
-    if _PF_CAND_HINT:
-        b = b.hint(_PF_CAND_HINT)
-    # _PF_REPART_CAND would reuse the dedup's exchange as the first verify
-    # join's distribution (repartition("id_a") satisfies the (id_a, id_b)
-    # aggregate's clustered distribution and pre-positions the stream for
-    # the id_a join) — measured SLOWER, see the knob's comment; default
-    # keeps the planner's own shape: map-side partial dedup, then one
-    # ENSURE_REQUIREMENTS exchange per verify key.
-    cand_raw = (
+    # the planner's own shape (see the plan-shape comment above): map-side
+    # partial dedup, then one ENSURE_REQUIREMENTS exchange per verify key
+    cand_ids = (
         a.join(b, "ptok")
         .filter(
             (F.col("id_a") < F.col("id_b"))
@@ -1428,28 +1374,23 @@ def prefix_filter_jaccard_pairs(
             & (F.lit(100) * F.col("pb") >= F.lit(threshold_x100) * F.col("pa"))
         )
         .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
-    if _PF_REPART_CAND:
-        cand_raw = cand_raw.repartition("id_a")
-    cand_ids = cand_raw.dropDuplicates(["id_a", "id_b"])
     # verification joins the (|docs|-row) ranked frame back per side as a
-    # SHUFFLED-HASH join (see _PF_VERIFY_HINT above): building a local hash
+    # SHUFFLED-HASH join (plan-shape comment above): building a local hash
     # map on the uniformly-id-keyed ranked partitions skips sorting the
-    # candidate frame twice. (Broadcast was A/B'd and REJECTED earlier this
-    # round: two ~12 MB broadcast builds lose to the narrow-row shuffle.)
+    # candidate frame twice. (Broadcast was A/B'd and REJECTED: two ~12 MB
+    # broadcast builds lose to the narrow-row shuffle.)
     r_a = ranked.select(
         F.col("doc").alias("id_a"),
         F.col("stoks").alias("toks_a"),
         F.col("sz").alias("sz_a"),
-    )
+    ).hint("shuffle_hash")
     r_b = ranked.select(
         F.col("doc").alias("id_b"),
         F.col("stoks").alias("toks_b"),
         F.col("sz").alias("sz_b"),
-    )
-    if _PF_VERIFY_HINT:
-        r_a = r_a.hint(_PF_VERIFY_HINT)
-        r_b = r_b.hint(_PF_VERIFY_HINT)
+    ).hint("shuffle_hash")
     cand = cand_ids.join(r_a, "id_a").join(r_b, "id_b")
     inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("long")
     verified = cand.select(

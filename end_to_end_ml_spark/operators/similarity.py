@@ -21,6 +21,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import persist_owned, reuse
 from .dedup import _spread
 
 
@@ -568,7 +569,7 @@ def ivf_build_index(
     # persist the ASSIGNED frame itself (not a projection of it) so the
     # radii aggregate and every later probe join read the same cached
     # blocks instead of re-running the assignment mapInPandas
-    assigned = _assign_with_angle(hist_df, id_col, vec_col, cent).persist()
+    assigned, owned = persist_owned(_assign_with_angle(hist_df, id_col, vec_col, cent))
     radii_rows = assigned.groupBy("cell").agg(F.max("ang").alias("r")).collect()
     # keep the persisted frame itself as `cells` (the ang column rides
     # along unused) so unpersist() targets the cached plan directly
@@ -576,7 +577,7 @@ def ivf_build_index(
     radii = np.zeros(len(cent))
     for row in radii_rows:
         radii[row["cell"]] = row["r"]
-    return IvfIndex(cells, cent, radii, owned=True)
+    return IvfIndex(cells, cent, radii, owned=owned)
 
 
 def ivf_index_add(index: IvfIndex, new_df: DataFrame, id_col: str, vec_col: str) -> IvfIndex:
@@ -606,7 +607,9 @@ def ivf_index_add(index: IvfIndex, new_df: DataFrame, id_col: str, vec_col: str)
     records."""
     import numpy as np
 
-    assigned = _assign_with_angle(new_df, id_col, vec_col, index.centroids).persist()
+    assigned, owned = persist_owned(
+        _assign_with_angle(new_df, id_col, vec_col, index.centroids)
+    )
     # O(batch) radii aggregate — also materializes the new layer's cache
     radii_rows = assigned.groupBy("cell").agg(F.max("ang").alias("r")).collect()
     radii = index.radii.copy()
@@ -615,7 +618,7 @@ def ivf_index_add(index: IvfIndex, new_df: DataFrame, id_col: str, vec_col: str)
     cells = index.cells.select("cell", "nid", "nvec", "ang").unionByName(assigned)
     return IvfIndex(
         cells, index.centroids, radii, owned=True,
-        owned_frames=index._owned_frames + [assigned],
+        owned_frames=index._owned_frames + ([assigned] if owned else []),
     )
 
 
@@ -940,9 +943,12 @@ def ivf_probe_pairs_adaptive(
         # report, so the routing decision is unchanged.
         n_queries = new_df.count()
         n_cells = len(index.centroids)
-        exact_cand = _probe_candidate_cells(
-            new_df, id_col, vec_col, index, threshold, round_digits=round_digits
-        ).localCheckpoint(eager=True)
+        exact_cand = reuse(
+            _probe_candidate_cells(
+                new_df, id_col, vec_col, index, threshold, round_digits=round_digits
+            ),
+            eager=True,
+        )
         cand_rows = exact_cand.count()
         total = n_queries * n_cells
         pruned = 0.0 if total == 0 else 1.0 - cand_rows / total
@@ -1167,10 +1173,8 @@ def pairwise_cosine_histogram(
     # through `total`), so cut the lineage here — localCheckpoint
     # materializes the tiny frame eagerly and both consumers read the
     # checkpointed rows instead of re-running negative_pairs + cosine.
-    counts = (
-        binned.groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .localCheckpoint(eager=True)
+    counts = reuse(
+        binned.groupBy("bin").agg(F.count(F.lit(1)).alias("n_pairs")), eager=True
     )
     total = counts.agg(F.sum("n_pairs").alias("__t"))
     return (

@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import at_scale, reuse
+
 # Knuth multiplicative hash; exact in int64 for keys < ~3.5e9, and computable
 # identically by any SQL engine (pure integer arithmetic).
 _HASH_MULT = 2654435761
@@ -92,17 +94,15 @@ def _bucketed_rank(df: DataFrame, class_col: str, pk_col: str):
     # the offsets window AND every caller's per-class total — without a
     # checkpoint each reference re-derives the full input aggregate
     # (r14 census: t1 carried 3 input scans, j2 six). Scale-conditional
-    # via the derived a18 decision: at sf0.1 the checkpoint's job
+    # via materialize.at_scale: at sf0.1 the checkpoint's job
     # barrier loses to re-scanning a tiny parquet (measured t1
     # 1.25 -> 1.65 s unconditional), on a cluster each re-derivation is
     # a full distributed scan+window. ranked itself is data-sized and
     # deliberately NOT materialized (re-scan beats a full-data
     # checkpoint; house rule from temperature_sample).
-    from ..functions.metrics import _scale_materialize
-
     counts = ranked.groupBy(class_col, "__b").agg(F.count(F.lit(1)).alias("__cnt"))
-    if _scale_materialize(df):
-        counts = counts.localCheckpoint(eager=False)
+    if at_scale(df):
+        counts = reuse(counts)
     w_off = (
         Window.partitionBy(class_col)
         .orderBy("__b")

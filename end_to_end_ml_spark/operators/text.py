@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import reuse
+
 # Tiny stopword lists for the n-gram/stopword language heuristic. Deliberately
 # small + deterministic (this is a heuristic operator, not a model).
 STOPWORDS = {
@@ -835,7 +837,7 @@ def bpe_train_batched(
     spark_df = df.select(F.explode(tokens(text_col)).alias("w")).filter(
         F.length("w") > 0
     )
-    words = (
+    words = reuse(
         spark_df.groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(
@@ -844,8 +846,8 @@ def bpe_train_batched(
                 F.sequence(F.lit(1), F.length("w")),
                 lambda i: F.col("w").substr(i, F.lit(1)),
             ).alias("sym"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     if merges_per_round <= 0:
         raise ValueError("merges_per_round must be positive")
@@ -958,7 +960,7 @@ def bpe_train_batched(
         # 8 merges with ckpt_every=4, identical merge tables). The
         # interval bounds codegen expression depth for large n_merges.
         if ckpt_every > 0 and rounds % ckpt_every == 0:
-            words = words.localCheckpoint(eager=True)
+            words = reuse(words, eager=True)
     return merges
 
 
@@ -1003,16 +1005,14 @@ def bm25_components(
     toks = df.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("__tok")
     ).select(id_col, F.lower(F.col("__tok")).alias("token"))
-    per_doc = (
-        toks.groupBy(id_col)
-        .agg(
+    per_doc = reuse(
+        toks.groupBy(id_col).agg(
             F.count(F.lit(1)).alias("dl"),
             *[
                 F.sum((F.col("token") == F.lit(t)).cast("long")).alias(f"__tf_{i}")
                 for i, t in enumerate(lterms)
             ],
         )
-        .localCheckpoint(eager=False)
     )
     consts = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import at_scale, reuse
+
 
 def hourly_downsample(
     events: DataFrame, key_col: str, ts_col: str, value_col: str
@@ -276,12 +278,10 @@ def rolling_distinct_users(
     # pairs is consumed by days_present AND the explode — each reference
     # re-runs the full raw-events dedup shuffle (r14 census: ev10 carried
     # 3 input scans). Materialize once when the input is cluster-shaped
-    # (derived a18 decision); locally the job barrier loses to re-scanning
+    # (materialize.at_scale); locally the job barrier loses to re-scanning
     # a tiny parquet.
-    from ..functions.metrics import _scale_materialize
-
-    if _scale_materialize(events):
-        pairs = pairs.localCheckpoint(eager=False)
+    if at_scale(events):
+        pairs = reuse(pairs)
     days_present = pairs.select("d").distinct()
     exploded = pairs.select(
         "u",

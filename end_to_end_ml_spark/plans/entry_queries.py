@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 import os
 
 from ..functions import metrics as M
+from ..materialize import reuse
 from ..operators import dedup, multimodal, pit, prep, similarity, split, text
 from ..plans import relational as R
 from ..sources import io
@@ -1102,7 +1103,7 @@ def _pair_recall_summary(exact: DataFrame, approx: DataFrame, keys: list[str]) -
     # without the checkpoint the whole approx pipeline re-ran per
     # reference (r14 census: sim2r/sim3r/d6r each carried 5 input scans,
     # d4r 18 exchanges). Key columns only — a narrow result-pair frame.
-    a = approx.select(*keys).localCheckpoint(eager=False)
+    a = reuse(approx.select(*keys))
     hits = e.join(a.withColumn("__hit", F.lit(1)), on=keys, how="left")
     stats = hits.agg(
         F.count(F.lit(1)).alias("n_exact"),
@@ -1451,7 +1452,7 @@ def ml1b_validation_leaderboard(spark, sf_dir):
     # (~5 recomputations of the join+total-agg lineage, 24 parquet scans
     # in one plan); one lazy localCheckpoint makes it compute once
     # (2.36 → 1.52 s min-of-5 alternating A/B at sf0.1, identical rows)
-    labeled = df.join(F.broadcast(tot)).select(
+    labeled = reuse(df.join(F.broadcast(tot)).select(
         "o_orderkey",
         (
             F.col("o_totalprice").cast("decimal(20,4)") * F.col("__n")
@@ -1459,7 +1460,7 @@ def ml1b_validation_leaderboard(spark, sf_dir):
         )
         .cast("int")
         .alias("y"),
-    ).localCheckpoint(eager=False)
+    ))
     valid = split.stratified_split_column(
         labeled, "y", "o_orderkey", 0.8
     ).filter(F.col("split") == "test")
@@ -4320,11 +4321,10 @@ def q24_association_rules(spark, sf_dir):
     # (8 lineitem scans / distinct-orderkey job / two join-side exchanges
     # collapse into the basket aggregate; pairs come from in-array
     # combinations, see _basket_pairs_expr).
-    baskets = (
+    baskets = reuse(
         li.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("parts"))
-        .localCheckpoint(eager=False)
     )
     n_orders_total = baskets.count()  # scalar: one row per distinct order
     part_counts = baskets.select(
@@ -4569,9 +4569,9 @@ def pipe5_eval_set(spark, sf_dir):
     # The gram construction below is contaminated_doc_ids verbatim over
     # the bound __toks column (same tokens/word_ngrams_from_tokens
     # helpers), so the membership set — and the oracle — are unchanged.
-    staged = cands.select(
+    staged = reuse(cands.select(
         "doc_id", "lang", "n_chars", text.tokens("text").alias("__toks")
-    ).localCheckpoint(eager=False)
+    ))
     q = staged.select(
         "doc_id", "lang", "n_chars", F.size("__toks").alias("__ntok")
     ).filter((F.col("__ntok") >= 10) & (F.col("n_chars") >= 50))
@@ -5131,12 +5131,12 @@ def d11_edit_distance_pairs(spark, sf_dir):
     # both self-join sides re-scanned the parquet and re-derived the
     # prefix projection (no ReusedExchange across sides) — materialize the
     # narrow (id, lang, bucket, 48-char prefix) frame once
-    base = docs.select(
+    base = reuse(docs.select(
         "doc_id",
         "lang",
         F.floor(F.col("n_chars") / 50).alias("lb"),
         F.substring("text", 1, 48).alias("pfx"),
-    ).localCheckpoint(eager=False)
+    ))
     a = base.select(
         F.col("doc_id").alias("id_a"), "lang", "lb", F.col("pfx").alias("pfx_a")
     )
@@ -6189,9 +6189,7 @@ def d12_source_overlap_matrix(spark, sf_dir):
     # duplicates map-side. localCheckpoint: both totals and shared consume
     # this frame — without it the gram explode + groupBy computed twice
     # per execution.
-    src_sets = grams.groupBy("g").agg(
-        F.collect_set("source").alias("__ss")
-    ).localCheckpoint(eager=False)
+    src_sets = reuse(grams.groupBy("g").agg(F.collect_set("source").alias("__ss")))
     # distinct-gram totals per source, derived from the bounded sets
     totals = (
         src_sets.select(F.explode("__ss").alias("source"))
@@ -7616,17 +7614,16 @@ def pipe10_budget_curation(spark, sf_dir):
     # mass-duplicated fingerprint ships <= one row per map partition
     # instead of funneling every copy through one hot window partition
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
-    surv = (
+    # surv is 3 narrow columns/doc but its lineage re-runs the gopher
+    # feature extraction + the fingerprint window shuffle; it is consumed
+    # twice (allocation pass + draw pass). Lazy reuse: the rates broadcast
+    # build materializes it, the draw pass reads checkpointed rows
+    # (q23/mix4 pattern).
+    surv = reuse(
         feat.filter(F.col("keep"))
         .withColumn("__rn", F.row_number().over(w_fp))
         .filter(F.col("__rn") == 1)
         .select("doc_id", "source", "n_words")
-        # surv is 3 narrow columns/doc but its lineage re-runs the gopher
-        # feature extraction + the fingerprint window shuffle; it is
-        # consumed twice (allocation pass + draw pass). Lazy
-        # localCheckpoint: the rates broadcast build materializes it, the
-        # draw pass reads checkpointed rows (q23/mix4 pattern).
-        .localCheckpoint(eager=False)
     )
     rates = split.token_budget_allocation(
         surv, "source", "n_words", budget_tokens=50_000, max_epochs_x1024=1024
@@ -7889,16 +7886,15 @@ def pipe11_incremental_curation(spark, sf_dir):
         .select("*", *text.gopher_rule_columns())
     )
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
-    surv = (
+    # same double-consumption as pipe10, and here the lineage ALSO
+    # contains the history-fingerprint distinct + anti-join — without the
+    # checkpoint the full history scan ran twice per query
+    surv = reuse(
         feat.filter(F.col("keep") & F.col("source").isNotNull())
         .withColumn("__rn", F.row_number().over(w_fp))
         .filter(F.col("__rn") == 1)
         .join(hist, "fp", "left_anti")
         .select("doc_id", "source", "n_words")
-        # same double-consumption as pipe10, and here the lineage ALSO
-        # contains the history-fingerprint distinct + anti-join — without
-        # the checkpoint the full history scan ran twice per query
-        .localCheckpoint(eager=False)
     )
     rates = split.token_budget_allocation(
         surv, "source", "n_words", budget_tokens=3000, max_epochs_x1024=1024
@@ -8098,7 +8094,12 @@ def mix4_waterfill(spark, sf_dir):
     (≤|groups| rounds of O(|groups| log |groups|)) — trivial at any
     corpus size."""
     docs = load_table(spark, sf_dir, "documents")
-    staged = (
+    # staged is 16 B/doc (two longs) but its lineage tokenizes every
+    # document; it is consumed twice (the budget scalar below, then
+    # token_budget_allocation's groupBy). Lazy reuse: the total agg
+    # materializes it, the groupBy reads checkpointed rows — ONE tokenize
+    # pass instead of two (same pattern as q23/q24).
+    staged = reuse(
         docs.select(F.size(text.tokens("text")).cast("long").alias("n_ws_tokens"))
         .filter(F.col("n_ws_tokens") > 0)
         .select(
@@ -8107,12 +8108,6 @@ def mix4_waterfill(spark, sf_dir):
             .alias("len_bucket"),
             "n_ws_tokens",
         )
-        # staged is 16 B/doc (two longs) but its lineage tokenizes every
-        # document; it is consumed twice (the budget scalar below, then
-        # token_budget_allocation's groupBy). Lazy localCheckpoint: the
-        # total agg materializes it, the groupBy reads checkpointed rows —
-        # ONE tokenize pass instead of two (same pattern as q23/q24).
-        .localCheckpoint(eager=False)
     )
     total = staged.agg(F.sum("n_ws_tokens")).collect()[0][0]
     return split.token_budget_waterfill(
@@ -8328,7 +8323,7 @@ def pipe13_dsir_curation(spark, sf_dir):
     Round-13 (optimization): the frames referenced by more than one
     downstream consumer — surv (weights + scored + the target half of
     admitted_pop) and admitted_pop (budget rates + the final admit
-    join) — are localCheckpoint(eager=False)-materialized here; the
+    join) — are reuse()-materialized here; the
     scored rank input is materialized INSIDE two_level_rank (which reads
     it for level-1 rows AND the cell frame) since round 13.
     Without this the composed plan re-derived the gopher+keeper survivor
@@ -8352,12 +8347,11 @@ def pipe13_dsir_curation(spark, sf_dir):
     # source filter stays AFTER the window exactly as before: the rank-1
     # row IS the min-doc_id keeper, and only then is its source checked)
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
-    surv = (
+    surv = reuse(
         feat.filter(F.col("keep"))
         .withColumn("__rn", F.row_number().over(w_fp))
         .filter((F.col("__rn") == 1) & F.col("source").isNotNull())
         .select("doc_id", "source", "text", "n_words")
-        .localCheckpoint(eager=False)
     )
     is_target = F.col("source").isin(*_DSIR_TARGET_SOURCES)
     weights = TX.dsir_bucket_weights_from_flag(surv, is_target, "text")
@@ -8386,10 +8380,8 @@ def pipe13_dsir_curation(spark, sf_dir):
         .filter(F.col("pos") * 2 <= F.col("n_total") + 1)
         .select("doc_id", "source", "n_words")
     )
-    admitted_pop = (
-        surv.filter(is_target).select("doc_id", "source", "n_words")
-        .unionByName(sel)
-        .localCheckpoint(eager=False)
+    admitted_pop = reuse(
+        surv.filter(is_target).select("doc_id", "source", "n_words").unionByName(sel)
     )
     rates = split.token_budget_allocation(
         admitted_pop, "source", "n_words", budget_tokens=5_000,
@@ -8519,7 +8511,7 @@ REGISTRY["pipe13_dsir_curation"] = (pipe13_dsir_curation, PIPE13_SQL)
 # round-8 verdict asked for a deterministic rotation policy that bounds
 # every oracled query's driver-exposure latency; it lives in
 # tools/pick_window.py and this list is its verbatim output for
-# `--round 14` (re-run the tool to audit). Policy: (1) queries red in the
+# `--round 15` (re-run the tool to audit). Policy: (1) queries red in the
 # latest committed CORRECTNESS artifact are forced in until proven green
 # (none this round); (2) never-driver-exposed queries UNCONDITIONALLY,
 # newest registration round first (DRIVER_LEDGER.json) — round-9
@@ -8529,13 +8521,13 @@ REGISTRY["pipe13_dsir_curation"] = (pipe13_dsir_curation, PIPE13_SQL)
 # a round later; (3) previously-exposed fill by (exposure count, last
 # exposed round) with a best-effort family-coverage guard — ties broken
 # by md5(f"r{N}:{name}") so no name starves behind a fixed order.
-# Round-14 pick: 0 first exposures / 50 — pure RE-CHECK ROTATION
+# Round-15 pick: 0 first exposures / 50 — pure RE-CHECK ROTATION
 # (no new registrations carried in; r10's four first exposures all went
 # driver-green, so policy #2 has an empty queue).
 # As of CORRECTNESS_r09 every oracled registry query has at least one
 # green driver row, so windows are now pure least-exposed-first
 # re-checks: fill order (exposure count, last exposed round), ties
-# broken by md5(f"r14:{name}"), with the best-effort family guard.
+# broken by md5(f"r15:{name}"), with the best-effort family guard.
 # All registry entries remain locally verified via tools/check_oracle.py
 # (full-registry + full-window-at-sf0.1 results committed as
 # CHECK_ORACLE_LOCAL_r11.json / CHECK_ORACLE_SF01_WINDOW_r11.json);
@@ -8544,55 +8536,55 @@ REGISTRY["pipe13_dsir_curation"] = (pipe13_dsir_curation, PIPE13_SQL)
 # ---------------------------------------------------------------------------
 
 DRIVER_WINDOW = [
-    "d10_span_dedup",
-    "pipe6_incremental_ingest",
-    "t10_fixed_count_sample",
-    "ev6_linear_attribution",
-    "ev2_retention_cohorts",
-    "fn_array_suite",
-    "t13_four_way_carve",
-    "ts8_weekly_profile",
-    "x5_repetition_scores",
-    "ev4_top_session_paths",
-    "d12_source_overlap_matrix",
-    "dq1_expectations",
-    "a18_spearman_components",
-    "q7_volume_shipping",
-    "a11_champion_leaderboard",
-    "ev1_funnel_conversion",
-    "ev8_time_to_conversion",
-    "x17_bm25_components",
-    "a15_drift_bins",
-    "f11_quantile_uniform",
-    "t9_weighted_sample",
-    "dq3_referential_integrity",
-    "ts7_countmin_heavy_hitters",
-    "mix1_temperature_sample",
-    "pipe5_eval_set",
-    "s9_online_export",
-    "ts2_gap_fill",
-    "pipe7_curated_shards",
-    "f8_label_index",
-    "q24_association_rules",
-    "pipe10_budget_curation",
-    "ts4b_hll_registers",
-    "pipe8_incremental_near_dup",
-    "set1_repeat_customers",
-    "emb5_cosine_histogram",
-    "mm3_resize_payloads",
-    "agg_grouping_sets",
-    "p9_recode_status",
-    "skew1_salted_join_agg",
-    "pack3_shard_shuffle",
-    "w7_pivot_matrix",
-    "j5_customers_without_orders",
-    "sim1b_topk_sharded",
+    "t12_replicated_sample",
+    "ts11_quantile_sketch",
+    "x12_dup_ngram_fraction",
+    "x22_gopher_filters",
+    "a3_imbalance_ratio",
+    "s10_merge_upsert",
+    "dq5_id_gap_audit",
+    "ev7_event_transitions",
+    "ts10_rolling_zscore",
+    "ev10_stickiness",
+    "s17_schema_evolution",
+    "d4b_simhash_md5_pairs",
+    "x6_pii_scrub",
+    "ev9_attribution_models",
+    "d16_prefix_filter_jaccard",
+    "q15_top_supplier",
+    "d13_url_canonical_dupes",
+    "q12_late_shipments",
+    "x20_length_quantiles",
+    "fn_grouped_agg_wmean",
+    "q16_supplier_counts",
+    "d11_edit_distance_pairs",
+    "f3_cat_impute",
+    "s16_csv_roundtrip",
+    "f14_target_encode",
+    "t14_rolling_origin",
+    "pipe9_incremental_ann",
+    "mix2_token_budget",
+    "q11_important_parts",
+    "emb2_label_centroids",
+    "fn_window_suite",
+    "t9b_replicated_sample",
+    "x15_charset_audit",
+    "a17_corr_components",
+    "set3_union_targets",
+    "mm4_payload_dup_groups",
+    "agg_pivot_event_matrix",
+    "skew4_join_cardinality",
+    "p7_enforce_types",
+    "pack2_bin_summary",
+    "w1_top_parts",
+    "j2_split_overlap",
+    "sim1_topk_bruteforce",
     "prof1_column_profile",
     "ml1b_validation_leaderboard",
+    "m8q_threshold_sweep_quantized",
     "ord1_global_ordinal",
     "h7_asha_schedule",
-    "m8_threshold_sweep",
-    "st_sessionize",
+    "st_hourly_window",
     "rj1_event_pairs",
 ]
 

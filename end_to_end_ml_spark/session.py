@@ -41,14 +41,25 @@ def merge_driver_java_options(driver_mem: str, caller_jopts: str | None) -> str:
     return " ".join(parts)
 
 
+def _host_driver_memory() -> str:
+    """Default driver heap: the smaller of 20g and ~60% of the host's
+    ``MemAvailable``, in whole GiB (at least 1g). -Xms is pinned to this
+    value, so it must fit in what the host can actually commit."""
+    with open("/proc/meminfo") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemAvailable:"))
+    return f"{max(1, min(20, int(kib * 0.6) // 2**20))}g"
+
+
 def resolve_driver_memory(extra_conf: dict[str, str] | None) -> str:
     """Driver heap size with the precedence the -Xms floor must follow:
     an explicit extra_conf ``spark.driver.memory`` beats the
-    ``SPARK_GRAFT_DRIVER_MEM`` env default, so the fixed-heap floor built
-    from this value can never exceed the caller's -Xmx."""
-    return (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g")
+    ``SPARK_GRAFT_DRIVER_MEM`` env value, which beats the host-sized
+    default, so the fixed-heap floor built from this value can never
+    exceed the caller's -Xmx."""
+    mem = (extra_conf or {}).get(
+        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     )
+    return mem or _host_driver_memory()
 
 
 def get_spark(
@@ -67,7 +78,8 @@ def get_spark(
         master = f"local[{DEFAULT_CPUS}]"
     if master:
         builder = builder.master(master)
-    # Driver heap sizing rule (SPARK_GRAFT_DRIVER_MEM, default 20g): the
+    # Driver heap sizing rule (SPARK_GRAFT_DRIVER_MEM, default 20g capped
+    # at ~60% of the host's available memory): the
     # driver live set is bounded by (a) collect bounds — every driver-side
     # collect in the engine is capped (65536-row vocab/quantizer bounds,
     # 1-row aggregates), (b) broadcast relations (offsets/bounds tables,
@@ -79,8 +91,8 @@ def get_spark(
     # floor: ~7 GB peak observed at sf0.1). 20g = observed peak x ~3
     # headroom. -Xms is pinned to the same value (see extraJavaOptions
     # comment below), so the host must actually HAVE this much memory
-    # free: a caller on a smaller host passes SPARK_GRAFT_DRIVER_MEM=8g
-    # (tests/conftest.py honours the same env var).
+    # free: the default is therefore capped by _host_driver_memory, and
+    # SPARK_GRAFT_DRIVER_MEM still sets it explicitly.
     # An extra_conf override of spark.driver.memory takes precedence so
     # the -Xms floor can never exceed -Xmx (r13 ADVICE: a caller passing
     # driver.memory=8g used to still get -Xms20g and fail JVM startup).
@@ -118,7 +130,8 @@ def get_spark(
         # Xms=Xmx removes the heap commit/uncommit churn entirely: d16
         # reps went from [6.2..21.9] scatter to [5.0..5.9] steady state.
         # The default is sized to observed live sets (~7 GB peak at
-        # sf0.1), not the machine, and stays env-tunable for bigger jobs.
+        # sf0.1), capped by what the host has free so the pinned heap can
+        # be committed, and stays env-tunable for bigger jobs.
         "spark.driver.extraJavaOptions": driver_jopts,
         # The default 100-entry codegen cache thrashes on this workload:
         # one heavy query alone compiles ~29 units/run at local[32] and a

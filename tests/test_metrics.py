@@ -333,104 +333,3 @@ def test_two_level_rank_int32_extreme_span(spark):
     got = {r["tb"]: r["pos"] for r in M.two_level_rank(df, "s", "tb").collect()}
     ordered = sorted(rows, key=lambda t: (-t[1], t[0]))
     assert got == {tb: i + 1 for i, (tb, _) in enumerate(ordered)}
-
-
-class TestSpearmanScaleMaterialize:
-    def test_knob_is_result_identical(self, spark, monkeypatch):
-        """SPARK_GRAFT_SCALE_MATERIALIZE flips a18's plan to the
-        cluster shape (localCheckpoint the pair frame + each counts
-        table instead of re-deriving them per consumer — measured local
-        loss, cluster win; see the knob comment in functions/metrics).
-        The knob must never change a single value, ties and NULLs
-        included."""
-        from end_to_end_ml_spark.functions import metrics
-
-        xs = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, None, 7]
-        ys = [2, 7, 1, 8, 2, 8, 1, 8, 2, 8, 4, 3, None]
-        df = spark.createDataFrame(list(zip(xs, ys)), "x long, y long")
-
-        # env var is read at CALL time (r13 ADVICE: the import-time read
-        # made later env changes a silent no-op)
-        monkeypatch.setenv("SPARK_GRAFT_SCALE_MATERIALIZE", "0")
-        base = metrics.spearman_components(df, "x", "y").collect()
-        monkeypatch.setenv("SPARK_GRAFT_SCALE_MATERIALIZE", "1")
-        ckpt_df = metrics.spearman_components(df, "x", "y")
-        ckpt = ckpt_df.collect()
-        assert [tuple(r) for r in base] == [tuple(r) for r in ckpt]
-        # the knob actually changed the plan: checkpointed scans appear
-        plan = ckpt_df._jdf.queryExecution().toString()
-        assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
-
-    def test_auto_derive_local_default_off(self, spark, monkeypatch):
-        """With the env var UNSET, the decision is derived: a small frame
-        on a local master keeps the measured-optimal local plan (no
-        materialization barriers) — the r14 auto-derive must not change
-        the local bench's a18 plan."""
-        from end_to_end_ml_spark.functions import metrics
-
-        monkeypatch.delenv("SPARK_GRAFT_SCALE_MATERIALIZE", raising=False)
-        df = spark.createDataFrame([(1, 2), (3, 4)], "x long, y long")
-        # decision only: the plan-shape flip itself is pinned by
-        # test_knob_is_result_identical (the base frame is already
-        # RDD-backed under createDataFrame, so "ExistingRDD" appears in
-        # every plan here and cannot witness the checkpoint)
-        assert metrics._scale_materialize(df) is False
-
-    def test_auto_derive_size_threshold(self, spark, monkeypatch):
-        """Unset env + a local master still flips to the materialized
-        shape when the optimizer's size estimate for the input exceeds
-        the threshold (a big LOCAL job re-deriving a multi-GB frame per
-        consumer loses to one materialization), while Catalyst's
-        unknown-size sentinel (Long.MaxValue on ExistingRDD inputs) is
-        treated as unknown, not huge."""
-        from end_to_end_ml_spark.functions import metrics
-
-        monkeypatch.delenv("SPARK_GRAFT_SCALE_MATERIALIZE", raising=False)
-        # Range has exact optimizer stats (rows x 8 bytes), so it can
-        # cross a zeroed threshold honestly
-        df = spark.range(4).selectExpr("id as x", "id as y")
-        monkeypatch.setattr(metrics, "_SCALE_MATERIALIZE_BYTES", 0)
-        assert metrics._scale_materialize(df) is True
-        # unknown-size sentinel: an ExistingRDD frame reports
-        # defaultSizeInBytes (Long.MaxValue) — treated as unknown, must
-        # NOT flip the plan even with the threshold at zero
-        rdd_backed = spark.createDataFrame([(1, 2), (3, 4)], "x long, y long")
-        assert metrics._scale_materialize(rdd_backed) is False
-
-    def test_drift_and_ovr_sites_flip_with_env(self, spark, monkeypatch):
-        """The r14 census sites (drift_bins histogram, roc_auc_ovr
-        per_class, _bucketed_rank counts) follow the same derived
-        decision: env=1 forces the materialized cluster shape (plan
-        gains Scan ExistingRDD), env=0 keeps the re-derive shape, and
-        BOTH produce identical values."""
-        from end_to_end_ml_spark.functions import metrics
-        from end_to_end_ml_spark.operators import split as SP
-
-        ref = spark.range(0, 100).selectExpr("cast(id as double) as v")
-        cur = spark.range(40, 140).selectExpr("cast(id as double) as v")
-        lab = spark.range(0, 90).selectExpr(
-            "cast(id % 3 as int) as y",
-            *[f"cast(id % {m} as double) / {m} as s{i}" for i, m in
-              enumerate([7, 11, 13])],
-        )
-        rows = {}
-        for env in ("0", "1"):
-            monkeypatch.setenv("SPARK_GRAFT_SCALE_MATERIALIZE", env)
-            ks = metrics.ks_stat_exact(ref, cur, "v", lo=0.0, hi=140.0, n_bins=10)
-            ovr = metrics.roc_auc_ovr(lab, "y", {0: "s0", 1: "s1", 2: "s2"})
-            tr, te = SP.stratified_split(
-                lab.selectExpr("*", "cast(y * 1000 + s0 * 7 as long) as pk"),
-                "y",
-                "pk",
-            )
-            rows[env] = (
-                [tuple(r) for r in ks.collect()],
-                [tuple(r) for r in ovr.collect()],
-                tr.count(),
-                te.count(),
-            )
-            if env == "1":
-                for q in (ks, ovr):
-                    plan = q._jdf.queryExecution().toString()
-                    assert "ExistingRDD" in plan
-        assert rows["0"] == rows["1"]

@@ -468,11 +468,14 @@ def test_driver_java_options_fixed_heap_merge():
     )
 
 
-def test_driver_mem_extra_conf_precedence():
+def test_driver_mem_extra_conf_precedence(monkeypatch):
     """get_spark derives the -Xms floor from extra_conf's
     spark.driver.memory when the caller overrides it, so the floor can
     never exceed -Xmx (r13 ADVICE medium: driver.memory=8g via extra_conf
-    used to still get -Xms20g and the JVM would refuse to start)."""
+    used to still get -Xms20g and the JVM would refuse to start). Without
+    an override the default fits the host, so -Xms can be committed."""
+    import re
+
     from end_to_end_ml_spark.session import (
         merge_driver_java_options,
         resolve_driver_memory,
@@ -483,3 +486,53 @@ def test_driver_mem_extra_conf_precedence():
     assert merge_driver_java_options(
         resolve_driver_memory({"spark.driver.memory": "8g"}), None
     ).startswith("-Xms8g ")
+    # with no override the default is host-sized: whole GiB, at most 20g
+    # and at most what the host has available (-Xms pins all of it)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    derived = resolve_driver_memory(None)
+    assert re.fullmatch(r"[1-9]\d*g", derived), derived
+    with open("/proc/meminfo") as fh:
+        avail_kib = next(
+            int(ln.split()[1]) for ln in fh if ln.startswith("MemAvailable:")
+        )
+    assert int(derived[:-1]) <= 20
+    assert int(derived[:-1]) * 2**20 <= avail_kib
+    # extra_conf still wins over both the env value and the derived default
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert resolve_driver_memory(None) == "3g"
+    assert resolve_driver_memory({"spark.driver.memory": "2g"}) == "2g"
+
+
+def test_materialization_goes_through_one_module():
+    """Every checkpoint/persist/cache call in the package goes through
+    end_to_end_ml_spark/materialize.py, so the materialization policy
+    lives in one place. AST-based (calls, not comments or docstrings).
+    The two named exceptions: train/tuner.py's per-study
+    persist(MEMORY_AND_DISK), and sources/io.py's corrupt-record cache(),
+    which Spark requires before filtering on _corrupt_record."""
+    import ast
+    import pathlib
+
+    src_root = pathlib.Path(__file__).resolve().parents[1] / "end_to_end_ml_spark"
+    methods = {"localCheckpoint", "checkpoint", "persist", "cache"}
+    allowed = {
+        ("materialize.py", "localCheckpoint"),
+        ("materialize.py", "persist"),
+        ("train/tuner.py", "persist"),
+        ("sources/io.py", "cache"),
+    }
+    offenders = []
+    for py in sorted(src_root.rglob("*.py")):
+        rel = py.relative_to(src_root).as_posix()
+        for node in ast.walk(ast.parse(py.read_text(), filename=str(py))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in methods
+                and (rel, node.func.attr) not in allowed
+            ):
+                offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
+    assert not offenders, (
+        "materialize frames through end_to_end_ml_spark.materialize "
+        "(reuse / persist_owned): " + "; ".join(offenders)
+    )

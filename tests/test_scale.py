@@ -206,33 +206,6 @@ def test_write_parquet_observed_single_pass_stats(spark, tmp_path):
     assert back.count() == 1000
 
 
-def test_guarded_persist_skips_already_cached_plan(spark):
-    """dedup._persist must not re-persist a plan the CacheManager already
-    holds — with memoized scans a repeated operator call rebuilds an
-    IDENTICAL logical plan, and a bare persist() there logs `Asked to
-    cache already cached data` and risks sibling-cache eviction."""
-    from pyspark.storagelevel import StorageLevel
-
-    from end_to_end_ml_spark.operators.dedup import _persist
-
-    a = spark.range(1234).withColumn("v", F.col("id") % 5)
-    try:
-        _persist(a).count()  # materialize the cache
-        # a SEPARATE DataFrame object with the identical logical plan:
-        # storageLevel consults the CacheManager by plan, not by object
-        b = spark.range(1234).withColumn("v", F.col("id") % 5)
-        assert b.storageLevel != StorageLevel.NONE
-        assert _persist(b) is b  # guard short-circuits: no second persist
-    finally:
-        a.unpersist()
-    fresh = spark.range(4321).withColumn("v", F.col("id") % 5)
-    try:
-        assert fresh.storageLevel == StorageLevel.NONE
-        assert _persist(fresh) is not fresh or fresh.storageLevel != StorageLevel.NONE
-    finally:
-        fresh.unpersist()
-
-
 def test_dedup_operators_do_not_stack_cache_entries(spark):
     """Calling a fingerprint-persisting operator twice over the memoized
     scan leaves ONE cache entry per persisted intermediate, not two — the
